@@ -1,4 +1,4 @@
-.PHONY: test verify bench
+.PHONY: test verify bench perfbench
 
 test:
 	python -m pytest tests/ -q
@@ -10,3 +10,9 @@ verify: test
 
 bench:
 	python bench.py
+
+# The seeded benchmark (BENCHMARK.json): its self-tests, then one
+# untraced csv_etl run. Prints the result JSON as the last line.
+perfbench:
+	python3 -m pytest perfbench/ -q
+	python3 perfbench/run.py --workload csv_etl --seed 1 --seconds 28 --trace 0

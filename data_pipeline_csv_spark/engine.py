@@ -18,9 +18,10 @@ Reference surface reproduced (SURVEY.md §2):
 - Q1-Q4 read path: table existence, preview(limit), full count,
   schema introspection (reference api.py:178-242).
 
-Everything is lazy until ``load``/``preview``/``stats`` trigger an
-action, so Catalyst fuses ingest+clean+write into one distributed job
-— the reference materialized three full in-memory copies.
+Apart from CSV schema inference at ingest, everything is lazy until
+``load``/``preview``/``stats`` trigger an action, so Catalyst fuses
+ingest+clean+write into one distributed write job — the reference
+materialized three full in-memory copies.
 """
 
 from __future__ import annotations
@@ -29,7 +30,7 @@ import os
 import shutil
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .sources.csv import read_csv, read_csv_dir
@@ -39,6 +40,14 @@ from .sources.csv import read_csv, read_csv_dir
 class LoadResult:
     table_path: str
     rows_written: int
+
+
+def _observe_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with a row-count ``Observation`` attached. Attach it to the
+    frame that is written: it reports the first action that completes
+    on its plan, and the write's own job computes it for free."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
 def clear_managed_table(spark: SparkSession, table_name: str) -> None:
@@ -114,9 +123,9 @@ class PipelineEngine:
         writer accepts them (verified), so no escaping layer is needed.
         """
         path = self._table_path(table_name)
+        df, obs = _observe_rows(df)
         df.write.mode("overwrite").parquet(path)
-        rows = self.spark.read.parquet(path).count()
-        return LoadResult(table_path=path, rows_written=rows)
+        return LoadResult(table_path=path, rows_written=obs.get["rows"])
 
     # -- scale-out sinks (beyond reference surface) ---------------------
     def write_partitioned(
@@ -131,9 +140,9 @@ class PipelineEngine:
         per value.
         """
         path = self._table_path(table_name)
+        df, obs = _observe_rows(df)
         df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-        rows = self.spark.read.parquet(path).count()
-        return LoadResult(table_path=path, rows_written=rows)
+        return LoadResult(table_path=path, rows_written=obs.get["rows"])
 
     def write_bucketed(
         self,
@@ -230,16 +239,16 @@ class PipelineEngine:
             bits=bits,
         )
         path = self._table_path(table_name)
-        (
+        # observe the written frame, not ``df``: the bounds agg above is
+        # an earlier action on ``df``'s plan
+        out, obs = _observe_rows(
             df.withColumn("_z", z)
             .repartitionByRange(n_files, F.col("_z"))
             .sortWithinPartitions("_z")
             .drop("_z")
-            .write.mode("overwrite")
-            .parquet(path)
         )
-        rows = self.spark.read.parquet(path).count()
-        return LoadResult(table_path=path, rows_written=rows)
+        out.write.mode("overwrite").parquet(path)
+        return LoadResult(table_path=path, rows_written=obs.get["rows"])
 
     def compact_table(
         self, table_name: str, target_file_bytes: int = 128 << 20
@@ -439,8 +448,12 @@ class PipelineEngine:
         clean_how: str = "any",
         clean_subset: list[str] | None = None,
     ) -> LoadResult:
-        """ingest -> clean -> load as ONE lazy plan + one action
-        (reference flows/pipeline.py:34-43 ran three eager stages)."""
+        """ingest -> clean -> load as one lazy plan (reference
+        flows/pipeline.py:34-43 ran three eager stages). Spark jobs: two
+        per CSV file for ingest (a header read and a schema-inference
+        scan; a directory's files are probed concurrently), then one
+        write job, which also counts the rows through an
+        ``Observation``."""
         df = self.ingest(source_path)
         cleaned = self.clean(df, how=clean_how, subset=clean_subset)
         return self.load(cleaned, table_name)

@@ -14,8 +14,11 @@ Reference behavior being reproduced (Spark-first, not a port):
 Spark mapping: ``spark.read.csv`` is lazy/distributed/splittable; the
 by-name alignment uses per-file readers + ``unionByName(
 allowMissingColumns=True)`` because a single multi-path read aligns by
-position. Per-file error tolerance probes each file's header eagerly
-(cheap driver-side open of the first bytes, not a full read).
+position. Per-file error tolerance resolves each file's schema eagerly:
+with ``inferSchema`` that is two Spark jobs per file, a header read
+plus a full inference scan. The probes are independent, so they run
+concurrently on a thread pool; the union still follows sorted file
+order, so the first file fixes the column order.
 
 At scale: a directory of homogeneous CSVs should use the single
 ``spark.read.csv(dir)`` path (one distributed scan, no union plan);
@@ -27,8 +30,10 @@ from __future__ import annotations
 
 import logging
 import os
+from concurrent.futures import ThreadPoolExecutor
 from functools import reduce
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 logger = logging.getLogger(__name__)
@@ -77,17 +82,24 @@ def read_csv_dir(
         and f.lower().endswith(".csv")
         and os.path.isfile(os.path.join(dir_path, f))
     )
-    frames: list[DataFrame] = []
-    for name in names:
+
+    # run on pool threads with the caller's job group and tags
+    @inheritable_thread_target(spark)
+    def probe(name: str) -> DataFrame | None:
         full = os.path.join(dir_path, name)
         try:
             df = read_csv(spark, full, header=header, infer_schema=infer_schema)
             # force header/schema resolution now so a corrupt file is
             # caught here and skipped, like the reference's per-file try
             _ = df.schema
-            frames.append(df)
+            return df
         except Exception as exc:  # noqa: BLE001 - reference skips any per-file failure
             logger.warning("Skipping unreadable CSV %s: %s", full, exc)
+            return None
+
+    workers = max(1, min(len(names), spark.sparkContext.defaultParallelism))
+    with ThreadPoolExecutor(max_workers=workers) as ex:
+        frames = [df for df in ex.map(probe, names) if df is not None]
     if not frames:
         raise FileNotFoundError(f"No readable CSV files in: {dir_path}")
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)

@@ -6,11 +6,14 @@ all-null); dropna excluding Message -> 18,862. The synthetic startup
 dataset: 100 rows, categories 33/34/33, in_stock true = 50, 0 nulls.
 """
 
+import logging
 import os
+import threading
 
 import pytest
 
 from data_pipeline_csv_spark.engine import PipelineEngine
+from data_pipeline_csv_spark.sources import csv as csv_source
 from data_pipeline_csv_spark.sources.csv import read_csv, read_csv_dir
 from data_pipeline_csv_spark.sources.synthetic import synthetic_products
 
@@ -47,7 +50,7 @@ def test_golden_shipped_dataset(spark, engine):
 
 
 # ---- S2/S3: tolerant directory scan ----------------------------------
-def test_dir_scan_aligns_by_name_and_skips_bad(spark, tmp_path):
+def test_dir_scan_aligns_by_name_and_skips_bad(spark, tmp_path, monkeypatch, caplog):
     d = tmp_path / "raw"
     d.mkdir()
     (d / "a.csv").write_text("id,name\n1,x\n2,y\n")
@@ -60,6 +63,61 @@ def test_dir_scan_aligns_by_name_and_skips_bad(spark, tmp_path):
     # by-name alignment: missing columns are null
     rows = {(r["id"], r["name"], r["extra"]) for r in df.collect()}
     assert (None, "z", 9) in rows
+
+    # S3: a file whose schema resolution raises is skipped with a
+    # warning; the readable files are still unioned
+    (d / "c.csv").write_text("id,name\n3,w\n")
+    real = csv_source.read_csv
+
+    def broken_c(spark, path, **kw):
+        if os.path.basename(path) == "c.csv":
+            raise RuntimeError("corrupt header")
+        return real(spark, path, **kw)
+
+    monkeypatch.setattr(csv_source, "read_csv", broken_c)
+    with caplog.at_level(logging.WARNING, logger=csv_source.__name__):
+        df = read_csv_dir(spark, str(d))
+    assert df.count() == 3
+    assert [r.getMessage() for r in caplog.records if "c.csv" in r.getMessage()]
+    assert not [r for r in caplog.records if "a.csv" in r.getMessage()]
+
+    # the first-sorted file's probe finishes last, yet it still fixes
+    # the union's column order
+    done: list[str] = []
+    others_done = threading.Event()
+
+    def slow_a(spark, path, **kw):
+        name = os.path.basename(path)
+        try:
+            df = real(spark, path, **kw)
+            if name == "a.csv":
+                assert others_done.wait(60)
+            return df
+        finally:
+            done.append(name)
+            if len(done) == 2:
+                others_done.set()
+
+    monkeypatch.setattr(csv_source, "read_csv", slow_a)
+    df = read_csv_dir(spark, str(d))
+    assert done[-1] == "a.csv"
+    assert df.columns == ["id", "name", "extra"]
+    assert df.count() == 4
+
+
+def test_dir_scan_probes_run_in_callers_job_group(spark, tmp_path):
+    d = tmp_path / "raw"
+    d.mkdir()
+    for i in range(3):
+        (d / f"p{i}.csv").write_text(f"id,name\n{i},n{i}\n")
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "csv-dir-probe")
+    try:
+        read_csv_dir(spark, str(d))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # header read + inference scan per file, all charged to the group
+    assert len(sc.statusTracker().getJobIdsForGroup("csv-dir-probe")) == 6
 
 
 def test_dir_scan_empty_raises(spark, tmp_path):
@@ -125,6 +183,28 @@ def test_pipeline_end_to_end(spark, engine, tmp_path):
     assert result2.rows_written == 2
     engine.drop_table("products")
     assert not engine.table_exists("products")
+
+
+def test_pipeline_rows_written_counts_what_was_loaded(spark, engine, tmp_path):
+    # the reference's load-bearing quirk: an all-empty column makes
+    # dropna remove every row, and the table is written empty
+    quirk = tmp_path / "quirk"
+    quirk.mkdir()
+    (quirk / "a.csv").write_text("id,name,Message\n1,x,\n2,y,\n")
+    (quirk / "b.csv").write_text("Message,id,name\n,3,z\n")
+    result = engine.run_pipeline(str(quirk), "quirk")
+    assert result.rows_written == 0 == engine.stats("quirk")["total_records"]
+
+    # files that reorder and omit columns: rows missing a column are
+    # dropped, and the count is what a fresh read of the table sees
+    ragged = tmp_path / "ragged"
+    ragged.mkdir()
+    (ragged / "a.csv").write_text("id,name,price\n1,apple,1.5\n2,,2.0\n3,pear,3.0\n")
+    (ragged / "b.csv").write_text("price,name,id\n4.0,fig,4\n5.0,kiwi,5\n")
+    (ragged / "c.csv").write_text("id,name\n6,lime\n")
+    result = engine.run_pipeline(str(ragged), "ragged")
+    assert result.rows_written == 4
+    assert result.rows_written == spark.read.parquet(result.table_path).count()
 
 
 def test_column_names_with_spaces_roundtrip(spark, engine, tmp_path):
